@@ -151,7 +151,7 @@ HEADLINE = [
 # Keep this list to queries nobody optimizes.
 ENV_SENTINELS = (
     "pricing_summary",
-    "json_extract",
+    "window_running_total",
     "window_topk_orders",
     "region_revenue",
     "segment_derive",

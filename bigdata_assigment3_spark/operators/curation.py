@@ -23,8 +23,7 @@ from pyspark.sql.window import Window
 from ..functions.hashing import md5_int56_duck, md5_int56_spark
 from ..registry import query
 from ..session import lineage_checkpoint
-from ..sources import load_table
-from .dedup import _docs_parallel
+from ..sources import load_table_parallel
 
 # ---------------------------------------------------------------- n-grams
 
@@ -87,7 +86,7 @@ def q_repetition_ngram_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     Pure per-document array math — a map-only stage with no shuffle;
     at 100 TB this pipelines with the scan at full parquet read speed.
     """
-    docs = _docs_parallel(spark, sf_dir)
+    docs = load_table_parallel(spark, sf_dir, "documents")
     words = _words()
     grams = _ngrams(words, 2)
     g = docs.filter(F.size(words) >= 2).select(
@@ -153,7 +152,7 @@ def q_decontamination_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     the build side of the join, so Spark broadcasts it and the 100 TB
     side streams through a semi-join — never the reverse.
     """
-    docs = _docs_parallel(spark, sf_dir)
+    docs = load_table_parallel(spark, sf_dir, "documents")
     words = _words()
     grams = (
         docs.filter(F.size(words) >= DECON_N)
@@ -232,7 +231,7 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 100 TB anti-pattern; per-shard streams are how real packers
     (and this query) stay embarrassingly parallel.
     """
-    docs = _docs_parallel(spark, sf_dir)
+    docs = load_table_parallel(spark, sf_dir, "documents")
     t = docs.select("doc_id", "source", F.size(_words()).alias("n_tokens"))
     w = (
         Window.partitionBy("source")
@@ -292,7 +291,7 @@ def q_domain_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     One hash agg + a 1-row broadcast of the totals; integer token
     counts make the two output ratios the only float ops.
     """
-    docs = _docs_parallel(spark, sf_dir)
+    docs = load_table_parallel(spark, sf_dir, "documents")
     t = docs.groupBy("source").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
         F.sum(F.size(_words())).cast("bigint").alias("n_tokens"),
@@ -332,7 +331,7 @@ _STOP_IN = ", ".join(f"'{w}'" for w in _STOPWORDS)
 def _quality_verdict_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc quality verdict (doc_id, verdict) — the shared core of
     the aggregate report and the composed pipeline verdict."""
-    docs = _docs_parallel(spark, sf_dir)
+    docs = load_table_parallel(spark, sf_dir, "documents")
     words = _words()
     grams = _ngrams(words, 2)
     f = docs.select(
@@ -466,7 +465,7 @@ def q_lm_bigram_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~1e-12 association-order drift of the sum, so the score is
     cross-engine stable.
     """
-    docs = _docs_parallel(spark, sf_dir)
+    docs = load_table_parallel(spark, sf_dir, "documents")
     words = _words()
     w = docs.select("doc_id", words.alias("words"))
     uni = w.select(F.explode("words").alias("word"))
@@ -538,7 +537,7 @@ def q_span_dedup_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a shuffle join on the same key — sub-quadratic end to end, the
     distributable stand-in for a suffix array at 100 TB.
     """
-    docs = _docs_parallel(spark, sf_dir)
+    docs = load_table_parallel(spark, sf_dir, "documents")
     words = _words()
     spans = (
         docs.filter(F.size(words) >= SPAN_N)
@@ -664,7 +663,7 @@ def q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     regex (Spark) and RE2 (DuckDB) match identically; redaction is
     ``regexp_replace`` in the JVM, no Python.
     """
-    docs = _docs_parallel(spark, sf_dir)
+    docs = load_table_parallel(spark, sf_dir, "documents")
     email = F.when(
         F.col("doc_id") % 5 == 0,
         F.concat(F.lit(" contact u"), F.col("doc_id").cast("string"), F.lit("@mail.com")),

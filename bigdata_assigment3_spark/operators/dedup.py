@@ -103,24 +103,6 @@ _PAIRS_CACHE: dict = {}
 _CANON_CACHE: dict = {}
 
 
-def _docs_parallel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents scan with a small-file guard: the testdata table is
-    ONE parquet file -> one partition, which would run the whole
-    shingle-hash fan-out single-threaded.  Repartition the (tiny) doc
-    rows up to the cluster's parallelism BEFORE the per-doc position
-    explode, so the heavy hashing runs wide.  At real corpus scale
-    the scan already has >= defaultParallelism splits and this is a
-    no-op."""
-    docs = load_table(spark, sf_dir, "documents")
-    want = spark.sparkContext.defaultParallelism
-    # File count is the cheap proxy for scan width (no .rdd conversion,
-    # which would build a whole RDD lineage just to read a number): a
-    # real corpus has >= want files and skips the shuffle entirely.
-    if len(docs.inputFiles()) < want:
-        docs = docs.repartition(want)
-    return docs
-
-
 def _inverted_index_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(sh:int56, docs: sorted array<doc_id>) — the inverted shingle
     index, df-pruned.
@@ -143,7 +125,7 @@ def _inverted_index_df(spark: SparkSession, sf_dir: str) -> DataFrame:
             _INV_CACHE.pop(k).unpersist()
         else:
             del _INV_CACHE[k]  # dead session: blocks are already gone
-    docs = _docs_parallel(spark, sf_dir)
+    docs = load_table_parallel(spark, sf_dir, "documents")
     # Positions derive from each doc's own length (no fixed cap: a
     # 10 kB doc gets ~2.5k shingles, not just the first 600 chars).
     shingle_str = f"substring(text, 1 + i * {STRIDE}, {K})"
@@ -408,7 +390,7 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """24-bit SimHash per document: bitwise majority vote over word
     hashes.  Near-dups land in equal buckets — dedup becomes a plain
     groupBy on the sketch (constant state per doc at any scale)."""
-    docs = _docs_parallel(spark, sf_dir)
+    docs = load_table_parallel(spark, sf_dir, "documents")
     words = F.array_distinct(F.filter(F.split("text", " "), lambda x: x != ""))
     w = docs.select("doc_id", F.explode(words).alias("word"))
     wh = w.select("doc_id", F.expr(md5_int56_spark("word")).alias("h"))
@@ -480,7 +462,7 @@ def q_dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     Learned float embeddings slot into the same plan after
     milli-quantization (see similarity.py).
     """
-    docs = _docs_parallel(spark, sf_dir)
+    docs = load_table_parallel(spark, sf_dir, "documents")
     shingle_str = f"substring(text, 1 + i * {STRIDE}, {K})"
     feat0 = (
         docs.filter(F.length("text") >= K)
@@ -1116,7 +1098,7 @@ def q_dedup_cascade_attrition(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows themselves are three 1-row count aggregates cross-joined —
     nothing here adds a corpus-growing shuffle beyond the stages it
     measures."""
-    docs = _docs_parallel(spark, sf_dir)
+    docs = load_table_parallel(spark, sf_dir, "documents")
     ex = docs.groupBy(F.md5("text").alias("h")).agg(F.min("doc_id").alias("doc_id"))
     canon = q_dedup_canonical_docs(spark, sf_dir).select("doc_id", "canonical_id")
     lab = ex.join(canon, "doc_id", "left").select(
@@ -1180,7 +1162,7 @@ def q_dedup_keep_longest(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank window partitioned by component_id — a high-cardinality key
     (components are small by construction), so the window is fully
     parallel."""
-    docs = _docs_parallel(spark, sf_dir)
+    docs = load_table_parallel(spark, sf_dir, "documents")
     canon = q_dedup_canonical_docs(spark, sf_dir).select("doc_id", "canonical_id")
     lab = (
         docs.select("doc_id", F.length("text").alias("n_chars_actual"))

@@ -907,12 +907,6 @@ def q_ann_cosine_topk_vec(spark: SparkSession, sf_dir: str) -> DataFrame:
                 }
             )
 
-    n_parts = spark.sparkContext.defaultParallelism
-    # widen only when the scan is narrower than the cluster (single
-    # test file): a real corpus already has >= parallelism splits and
-    # must NOT pay a full-corpus shuffle here
-    if len(emb.inputFiles()) < n_parts:
-        quant = quant.repartition(n_parts)
     scored = (
         quant
         .mapInPandas(score_batches, "query_id BIGINT, cand_id BIGINT, cos_raw DOUBLE")

@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..registry import query
-from ..sources import load_table
+from ..sources import load_table, load_table_parallel
 
 MIN_SUPPORT = 5
 BURST = 5
@@ -346,9 +346,11 @@ def q_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     try_cast-to-DOUBLE then FLOOR in BOTH engines: a direct
     string->int cast would crash Spark under ANSI on a non-integer k
     while DuckDB rounds it — try/double/floor agree everywhere
-    (malformed k -> NULL bucket).
+    (malformed k -> NULL bucket).  The JSON parse is the heavy per-row
+    work, so the scan goes through the scan-width guard and a
+    single-row-group events file no longer parses in one task.
     """
-    ev = load_table(spark, sf_dir, "events")
+    ev = load_table_parallel(spark, sf_dir, "events")
     k = F.get_json_object("props", "$.k").try_cast("double")
     return (
         ev.select(F.floor(k / 10).cast("bigint").alias("k_bucket"), "value")

@@ -25,6 +25,7 @@ def plan_summary(df: DataFrame) -> dict[str, int | bool]:
         "broadcast_joins": plan.count("BroadcastHashJoin") + plan.count("BroadcastNestedLoopJoin"),
         "sortmerge_joins": plan.count("SortMergeJoin"),
         "shuffles": plan.count("Exchange"),
+        "round_robin": plan.count("RoundRobinPartitioning"),
         "cartesian": plan.count("CartesianProduct"),
         "pushed_filters": "PushedFilters: [" in plan
         and "PushedFilters: []" not in plan.split("PushedFilters: [", 1)[0],

@@ -13,18 +13,21 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..session import ensure_session_conf
 
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
+# Each table's unique row key: the column(s) load_table_parallel
+# hashes to widen a narrow scan.
+TABLE_KEYS = {
+    "region": ("r_regionkey",),
+    "nation": ("n_nationkey",),
+    "customer": ("c_custkey",),
+    "supplier": ("s_suppkey",),
+    "part": ("p_partkey",),
+    "orders": ("o_orderkey",),
+    "lineitem": ("l_orderkey", "l_linenumber"),
+    "events": ("event_id",),
+    "documents": ("doc_id",),
+    "embeddings": ("vec_id",),
+}
+TABLES = tuple(TABLE_KEYS)
 
 
 def normalize_events_ts(df: DataFrame) -> DataFrame:
@@ -61,21 +64,34 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def load_table_parallel(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """:func:`load_table` + a small-file scan-width guard (round 16,
-    generalizing dedup._docs_parallel): a testdata table is ONE
-    parquet file with one row group, so every stage computing heavy
-    per-row work directly on the scan (quantization HOFs, SRP/argmin
-    expressions, Arrow kernels) runs SINGLE-TASK regardless of core
-    count — measured at the 10x audit fixture: ann_ivf_probe spent
-    9.9s of task time across 7 one-task stages (util 0.03).
-    Repartition the scan up to the cluster's parallelism BEFORE the
-    heavy expressions; at real corpus scale the scan already has
-    >= defaultParallelism splits and this is a no-op (file-count
-    guard, same as _docs_parallel)."""
+    """:func:`load_table`, widened to the cluster's parallelism when the
+    scan would be narrower — the package's one scan-width guard.
+
+    A testdata table is ONE parquet file with one row group, so every
+    stage computing heavy per-row work directly on the scan (shingle
+    hashing, quantization HOFs, JSON parsing, Arrow kernels) would run
+    as a single task whatever the core count; at the 10x fixture
+    ann_ivf_probe spent 9.9 s of task time in 7 one-task stages.
+
+    Gate: the scan's estimated split count, total input bytes (the
+    relation's size statistic) divided by
+    ``spark.sql.files.maxPartitionBytes``.  Below ``defaultParallelism``
+    the rows are hash-repartitioned to that width; a real corpus has
+    at least that many splits and the guard is a no-op (no exchange).
+
+    Why hash the table key (:data:`TABLE_KEYS`) and not round-robin:
+    ``repartition(n)`` places a row by its position in the input, so
+    to stay deterministic under task retries Spark sorts every row
+    first (``spark.sql.execution.sortBeforeRepartition``).  A unique
+    key spreads rows evenly and places each by its content alone, with
+    no sort, and operators keyed on the same column (windows/joins on
+    ``vec_id``) reuse the partitioning instead of shuffling again."""
     df = load_table(spark, sf_dir, name)
     want = spark.sparkContext.defaultParallelism
-    if len(df.inputFiles()) < want:
-        df = df.repartition(want)
+    size = df._jdf.queryExecution().analyzed().stats().sizeInBytes()
+    split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    if size < want * split:
+        df = df.repartition(want, *TABLE_KEYS[name])
     return df
 
 

@@ -42,7 +42,7 @@ bench = _load_bench()
 # commit and say so in the commit message.
 SENTINEL_SRC_SHA256 = {
     "pricing_summary": "d41d11f5d8c1bf017bafc2bbbdcad1eba6ac90e2aa6fd0579dfed79c2d0af9f9",
-    "json_extract": "31cfbb26aca521a629fbceb3cfc78e8b10a25d727263974f8e3ca8710e21d72d",
+    "window_running_total": "d5649e8cb309a8693ca6cd01fe78215f6c05649a4b6ee6080bece54d1c0af51c",
     "window_topk_orders": "0d6dbf3e1192344eecab51a7c379fc964cb75dc0f1170cb5e7c6e8a43545eff6",
     "region_revenue": "7862ae965addab585695f68a43b29102fb697927017505f336f2722cd5c409d4",
     "segment_derive": "3616c2d80d7acfa9087f7cba7d464b262f676fdb8d5a840071914f7435e2ae8a",

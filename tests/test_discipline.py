@@ -88,9 +88,9 @@ def test_no_pandas_collect_in_engine():
 # change).
 
 _SCALED_RE = re.compile(
-    r"load_table\s*\([^)]*[\"'](?:customer|supplier|part|orders|lineitem"
-    r"|events|documents|embeddings)[\"']"
-    r"|_docs_parallel\s*\(|_shingles_df\s*\(|\bq_\w+\s*\("
+    r"load_table(?:_parallel)?\s*\([^)]*[\"'](?:customer|supplier|part|orders"
+    r"|lineitem|events|documents|embeddings)[\"']"
+    r"|_shingles_df\s*\(|\bq_\w+\s*\("
     r"|customer_priority_history\s*\(|readStream"
 )
 _BOUNDED_RE = re.compile(

@@ -40,7 +40,11 @@ def test_no_cartesian_anywhere(spark):
     """No registered relational query may degrade to CartesianProduct
     (broadcast nested-loop against a tiny generator table is fine),
     and none may plan an unpartitioned total-order window over
-    unbounded input — the single-task sort that dies at 100 TB."""
+    unbounded input — the single-task sort that dies at 100 TB.  None
+    may plan a round-robin exchange either: it sorts every row before
+    the shuffle, and the scan-width guard hashes the table key instead
+    (skewed_join_hot_key's deliberate multi-mapper repartition is the
+    one exception)."""
     from bigdata_assigment3_spark.plans.explain import global_windows
 
     # Global windows over provably bounded inputs (fine at any scale):
@@ -58,6 +62,7 @@ def test_no_cartesian_anywhere(spark):
         df = spec.fn(spark, SF_ORACLE)
         s = plan_summary(df)
         assert s["cartesian"] == 0, (name, s)
+        assert s["round_robin"] == 0 or name == "skewed_join_hot_key", (name, s)
         if name not in bounded_window_ok:
             assert global_windows(df) == 0, name
 
@@ -252,7 +257,7 @@ def test_shuffle_exchange_budgets(spark):
         "span_dedup_ratio": 2,
         "hough_peak": 6,
         "temperature_sample": 7,
-        "lm_bigram_score": 9,
+        "lm_bigram_score": 8,
         # round-4 additions (counts at time of landing; tighten, don't loosen)
         "regression_stats": 1,
         "grouped_quantiles": 1,
@@ -388,23 +393,23 @@ def test_shuffle_exchange_budgets(spark):
         "dicom_series_sort": 0,      # tag-parse kernel, no shuffle
         "stream_pit_enrich": 0,      # broadcast history into each micro-batch
         # round-8 continuation (counts at landing; tighten, don't loosen)
-        "dedup_semantic_clustered": 19,  # +guard in the cached assignment lineage (re-counts per consumer)   # cached assignment + cluster pair join
+        "dedup_semantic_clustered": 13,  # cached assignment (+guard, re-counted per consumer) + cluster pair join
         # MapReduce-NB: wc/tokc/vocab aggs over the checkpointed
         # (doc, word) counts + scoring joins; tokenize runs once
         "langid_nb_classifier": 12,
         "dedup_cascade_attrition": 12,   # exact groupBy + cached canonical + funnel aggs
         "dedup_keep_longest": 2,         # cached canonical join + rank window
         "mixture_token_budget": 7,       # enum-keyed aggs + rate join-back
-        "ann_srp_bucketed": 6,           # bucket equi-join + rerank window (+guard exchanges, see note below)
-        "ann_ivf_deterministic": 18,     # probe-list rank + cluster join + rerank (+guard; cached assignment lineage re-counts per consumer)
-        "ann_pq_deterministic": 9,       # encode agg + code argmin + ADC agg + top-k (+guard)
+        "ann_srp_bucketed": 4,           # bucket equi-join + rerank window (+guard exchanges, see note below)
+        "ann_ivf_deterministic": 12,     # probe-list rank + cluster join + rerank (+guard; cached assignment lineage re-counts per consumer)
+        "ann_pq_deterministic": 5,       # encode agg + code argmin + ADC agg + top-k (+guard)
         # 1 at test scale (small side broadcasts); 3 allows the SMJ the
         # same plan becomes when BOTH explode sides grow past the
         # broadcast threshold — still no quadratic group join either way
         "interval_overlap_pairs": 3,
         # exact pipeline (1) + SRP bucket join/rerank (2) + eval
         # join/agg over probe-sized sides (3)
-        "ann_recall_eval": 12,
+        "ann_recall_eval": 10,
         "html_text_extract": 0,          # pure codegen string projection
         "bitmap_distinct_users": 2,      # (type,word) bit_or agg + popcount agg
         "interval_union_coverage": 2,    # sweep delta agg + suppkey window/agg
@@ -413,7 +418,7 @@ def test_shuffle_exchange_budgets(spark):
         # SRP (2) + IVF rerank over the memoized assignment (warm: 5)
         # + fusion union/agg/window on probe-sized rows; cold sessions
         # add the assignment build chain, hence the headroom
-        "ann_rrf_fusion": 24,
+        "ann_rrf_fusion": 16,
         # round-16 single-position sweep (was 78): one bucket shuffle
         # + bounded pair agg + one truth join; the remaining count is
         # the cached signature/index lineage embedded in
@@ -429,18 +434,19 @@ def test_shuffle_exchange_budgets(spark):
         "embedding_power_iteration": 0,
         # round-12 deterministic (oracle-backed) index paths — hashing
         # and list assignment are STATELESS per row, so the only
-        # exchanges are candidate distincts / final aggs.  Round 16:
-        # every embeddings scan also carries the small-file scan-width
-        # guard (sources.load_table_parallel — round-robin repartition,
-        # file-count no-op at a real corpus), which the static counts
-        # below include once per scan occurrence:
+        # exchanges are candidate distincts / final aggs.  Every
+        # embeddings scan also carries the scan-width guard
+        # (sources.load_table_parallel — a hash repartition on vec_id,
+        # a no-op once the scan has enough splits), which the static
+        # counts below include once per scan occurrence; windows and
+        # joins keyed on vec_id reuse its partitioning:
         # E2LSH: candidate-pair distinct + per-query agg
-        "ann_lsh_bucketed": 6,
+        "ann_lsh_bucketed": 5,
         # IVF: candidate-pair distinct + per-query top-k window
-        "ann_ivf_probe": 6,
+        "ann_ivf_probe": 5,
         # PQ: encode argmin agg + ADC agg + shortlist window + rerank
         # window (the bounded LUT/codebook sides all broadcast)
-        "ann_pq_rerank": 9,
+        "ann_pq_rerank": 6,
         # spherical k-means purity: (cluster,label) agg + majority agg
         # (training runs driver-side on the bounded sorted sample)
         "embedding_kmeans_purity": 3,
@@ -460,20 +466,66 @@ def test_shuffle_exchange_budgets(spark):
         "langid_char_ngram": 10,
         # 5 = dft term agg over the checkpointed postings + stats
         # SinglePartition agg + (query_id, doc_id) score agg + per-query
-        # WindowGroupLimit exchange + the small-file-guard round-robin
-        # repartition (round 13: fires ONLY when the docs scan has
-        # fewer splits than cores — a single giant row group serialized
-        # the 100x tokenize into one task; a real corpus skips it);
+        # WindowGroupLimit exchange + the scan-width guard's doc_id
+        # hash repartition (fires ONLY when the docs scan has fewer
+        # estimated splits than cores — a single giant row group
+        # serialized the 100x tokenize into one task; a real corpus
+        # skips it);
         # the vocab-pruned postings build (one more exchange) runs once
         # at lineage-checkpoint time and is shared by dft and contrib
         "bm25_topk_docs": 5,
         # wide assignment: the mapInArrow kernel is map-side; the only
         # exchange is the final 64-group aggregate
         "ann_ivf_wide": 2,
+        # scan-width guard (event_id hash) + the k_bucket aggregate
+        "json_extract": 2,
     }
     for name, budget in budgets.items():
         got = shuffle_exchanges(_plan(spark, name))
         assert got <= budget, (name, got, budget)
+
+
+def test_scan_width_guard_gates_on_split_count(spark, tmp_path):
+    """sources.load_table_parallel widens a scan only when its estimated
+    split count (input bytes / spark.sql.files.maxPartitionBytes) is
+    below defaultParallelism, and it widens by hashing the table key:
+    a round-robin repartition would sort every row first."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from bigdata_assigment3_spark.plans.explain import shuffle_exchanges
+    from bigdata_assigment3_spark.sources import load_table_parallel
+
+    docs = pa.table({
+        "doc_id": pa.array(range(2000), pa.int64()),
+        "text": [f"{i * 7919 % 104729:x}-{i}" * 8 for i in range(2000)],
+    })
+    want = spark.sparkContext.defaultParallelism
+
+    # one small single-row-group file: the guard hashes doc_id
+    (tmp_path / "narrow").mkdir()
+    pq.write_table(docs, tmp_path / "narrow" / "documents.parquet")
+    df = load_table_parallel(spark, str(tmp_path / "narrow"), "documents")
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "hashpartitioning(doc_id#" in plan and "RoundRobinPartitioning" not in plan, plan
+
+    # a few multi-row-group files, with maxPartitionBytes lowered so the
+    # scan has 2 x defaultParallelism splits: the guard is a no-op
+    wide = tmp_path / "wide" / "documents.parquet"
+    wide.mkdir(parents=True)
+    for i in range(3):
+        pq.write_table(docs, wide / f"part-{i}.parquet", row_group_size=100)
+    total = sum(f.stat().st_size for f in wide.iterdir())
+    key = "spark.sql.files.maxPartitionBytes"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, str(total // (2 * want)))
+    try:
+        df = load_table_parallel(spark, str(tmp_path / "wide"), "documents")
+        assert shuffle_exchanges(df) == 0
+        assert df.select(F.spark_partition_id()).distinct().count() >= want
+    finally:
+        spark.conf.set(key, prev)
 
 
 def test_ann_ivf_wide_takes_arrow_kernel(spark):
